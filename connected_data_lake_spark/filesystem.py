@@ -26,6 +26,8 @@ forced driver-side concat is exactly the wrong default.
 from __future__ import annotations
 
 import os
+import re
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -39,6 +41,35 @@ from connected_data_lake_spark.sources import rootfs as rootfs_source
 #: table URI currently bound to the shared ``rootfs`` alias view (the
 #: session is a singleton, so the alias is session-global state)
 _ACTIVE_ROOTFS: dict[str, str] = {}
+
+
+@dataclass(frozen=True)
+class _Snapshot:
+    """One committed manifest version of a table and its read relation."""
+
+    version: int
+    root: str
+    files: list[str]
+    stats: dict
+    relation: DataFrame
+
+
+def _listing(df: DataFrame) -> DataFrame:
+    """The canned listings' projection; P1: a zero-byte literal drops the
+    payload (reference lib.rs:120-131)."""
+    return df.select(
+        "name",
+        "parent",
+        "atime",
+        "ctime",
+        "mtime",
+        "mode",
+        "size",
+        "chunk_id",
+        "chunk_offset",
+        "chunk_size",
+        F.lit(b"").alias("data"),
+    )
 
 
 class Cdl:
@@ -100,9 +131,7 @@ class Cdl:
         ``name`` must be a plain SQL identifier; registering an existing
         name replaces it (temp-view semantics), including the per-dataset
         ``rootfs_*`` names — those are reserved."""
-        import re as _re
-
-        if not _re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", name):
+        if not re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", name):
             raise ValueError(f"not a valid SQL identifier: {name!r}")
         if name == ROOTFS_TABLE or name.startswith(f"{ROOTFS_TABLE}_"):
             raise ValueError(
@@ -174,6 +203,7 @@ class CdlFS:
         self.cdl = cdl
         self.path = path
         self._registered = False
+        self._snap: _Snapshot | None = None
         self._ordinal_cache: DataFrame | None = None
         self._ordinal_version: int | None = None
 
@@ -349,12 +379,44 @@ class CdlFS:
         was a wrong-answer hazard: with two live ``CdlFS`` instances,
         instance A's ``sql()`` would silently serve B's rows after B
         registered. ``table()`` now re-points the alias whenever another
-        dataset has taken it (see :meth:`table`)."""
-        df = rootfs_source.read_table(self.spark, self.path.table_uri)
+        dataset has taken it (see :meth:`table`). Both views bind the
+        latest snapshot's relation (:meth:`_snapshot`)."""
+        snap = self._snapshot()
+        if snap is None:  # no manifest (legacy/object-store table)
+            df = rootfs_source.read_table(self.spark, self.path.table_uri)
+        else:
+            df = snap.relation
         df.createOrReplaceTempView(self.view_name)
         df.createOrReplaceTempView(ROOTFS_TABLE)
         _ACTIVE_ROOTFS["uri"] = self.path.table_uri
         self._registered = True
+
+    def _snapshot(self) -> _Snapshot | None:
+        """The table's latest committed snapshot and its read relation, or
+        None for a table without a manifest (legacy/object-store).
+
+        The relation is built once per manifest version and kept until
+        any writer, this instance or another, moves the manifest. Every
+        pruned read filters it (:meth:`_pruned_read`) instead of building
+        a new one: a new relation lists its files into a new file index,
+        and on a local filesystem without native Hadoop that forks ``ls``
+        for every file's permissions. A moved version also marks the views
+        stale, so the next :meth:`table` binds them to the new relation."""
+        from .sources.maintenance import _store
+        from .sources.manifest import latest_snapshot
+
+        try:
+            root, store = _store(self.path.table_uri)
+        except ValueError:
+            return None
+        version, files, stats = latest_snapshot(store)
+        if version < 0:
+            return None
+        if self._snap is None or self._snap.version != version:
+            relation = rootfs_source.read_table(self.spark, self.path.table_uri, version=version)
+            self._snap = _Snapshot(version, root, files, stats, relation)
+            self._registered = False
+        return self._snap
 
     def table(self) -> DataFrame:
         if not self._registered:
@@ -409,56 +471,17 @@ class CdlFS:
         ``SELECT …, x'' AS data FROM rootfs WHERE parent LIKE '<p>' AND
         size IS NOT NULL ORDER BY name ASC`` (lib.rs:84-95, 120-131)."""
         p = "/" + path.strip("/") if path.strip("/") else "/"
-        predicate = F.col("parent").like(p) & F.col("size").isNotNull()
-        df = None
-        import re as _re
-
-        if not _re.search(r"[%_\\]", p):  # no LIKE metachars: LIKE == equality
-            try:  # one-dir listing of a huge table: read only its files
-                df = self._pruned_read([("parent", "=", p), ("size", "is_not_null")], predicate)
-            except ValueError:  # no manifest (legacy/object-store table)
-                df = None
-        if df is None:
-            df = self.table().filter(predicate)
-        return (
-            df
-            .select(
-                "name",
-                "parent",
-                "atime",
-                "ctime",
-                "mtime",
-                "mode",
-                "size",
-                "chunk_id",
-                "chunk_offset",
-                "chunk_size",
-                F.lit(b"").alias("data"),  # P1: zero-byte literal drops payload
-            )
-            .orderBy(F.col("name").asc())
-        )
+        filters = [("size", "is_not_null")]
+        if not re.search(r"[%_\\]", p):  # no LIKE metachars: LIKE == equality
+            filters.insert(0, ("parent", "=", p))
+        df, nbytes = self._pruned_read(filters, F.col("parent").like(p) & F.col("size").isNotNull())
+        return self._sorted(_listing(df), nbytes, F.col("name").asc())
 
     def read_dir_all(self) -> DataFrame:
         """List every file (reference read_dir_all: parent LIKE '%',
         ORDER BY parent, name — lib.rs:92-95)."""
-        df = self.table()
-        return (
-            df.filter(F.col("size").isNotNull())
-            .select(
-                "name",
-                "parent",
-                "atime",
-                "ctime",
-                "mtime",
-                "mode",
-                "size",
-                "chunk_id",
-                "chunk_offset",
-                "chunk_size",
-                F.lit(b"").alias("data"),
-            )
-            .orderBy(F.col("parent").asc(), F.col("name").asc())
-        )
+        df, nbytes = self._pruned_read([("size", "is_not_null")], F.col("size").isNotNull())
+        return self._sorted(_listing(df), nbytes, F.col("parent").asc(), F.col("name").asc())
 
     def read_files(self, condition: str) -> DataFrame:
         """Condition splice (P5): ``SELECT * FROM rootfs WHERE {condition}``
@@ -473,32 +496,37 @@ class CdlFS:
         unparseable condition just scans every file as before."""
         from .sources.zonemap import parse_condition
 
-        filters = parse_condition(condition)
-        if filters is not None:
-            try:
-                return self._pruned_read(filters, F.expr(condition))
-            except ValueError:  # no manifest (legacy/object-store table)
-                pass
-        return self.table().filter(F.expr(condition))
+        df, _ = self._pruned_read(parse_condition(condition), F.expr(condition))
+        return df
 
-    def _pruned_read(self, filters: list[tuple], predicate) -> DataFrame:
-        """File-pruned read: ``filters`` drop files via the manifest stats,
-        ``predicate`` (a Column — the ORIGINAL user condition, never the
-        triples) restores exact row semantics over the survivors."""
-        from .sources.maintenance import _read, _store
-        from .sources.manifest import latest_snapshot
+    def _pruned_read(self, filters: list[tuple] | None, predicate=None) -> tuple[DataFrame, int | None]:
+        """File-pruned read of the latest snapshot, and the bytes of the
+        files it scans (None when unknown): ``filters`` drop files via the
+        manifest stats, ``predicate`` (a Column — the ORIGINAL user
+        condition, never the triples) restores exact row semantics over
+        the survivors. Tables without a manifest (legacy/object-store)
+        filter the registered view."""
+        from .sources.maintenance import select_files
         from .sources.zonemap import prune_files
 
-        root, store = _store(self.path.table_uri)
-        _, files, stats = latest_snapshot(store)
-        if not files:
-            return self.table().filter(predicate)
-        live = prune_files(files, stats, filters)
-        if not live:
-            base = _read(self.spark, root, store, files).limit(0)
+        snap = self._snapshot()
+        if snap is None:
+            df, nbytes = self.table(), None
         else:
-            base = _read(self.spark, root, store, live)
-        return base.filter(predicate)
+            live = prune_files(snap.files, snap.stats, filters)
+            df = select_files(snap.relation, snap.root, snap.files, live)
+            nbytes = sum(os.path.getsize(os.path.join(snap.root, f)) for f in live)
+        return (df if predicate is None else df.filter(predicate)), nbytes
+
+    def _sorted(self, df: DataFrame, nbytes: int | None, *order) -> DataFrame:
+        """``df`` sorted by ``order``. When the scanned files fit Spark's
+        one-split budget (the session's ``spark.sql.files.maxPartitionBytes``)
+        one task sorts them in place: one job, no range-partitioner sample
+        job and no exchange. Larger or unsized inputs keep the global sort."""
+        budget = self.spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+        if nbytes is not None and nbytes <= budget:
+            return df.coalesce(1).sortWithinPartitions(*order)
+        return df.orderBy(*order)
 
     def scan(self, filters: list[tuple] | None = None, columns: list[str] | None = None) -> DataFrame:
         """Zone-map-pruned scan: like :meth:`read_files`, but the predicate
@@ -509,16 +537,10 @@ class CdlFS:
         identical to the equivalent ``read_files`` condition (pruning is
         conservative; the predicate is re-applied exactly). Tables without
         a manifest (legacy/object-store) fall back to a plain filter."""
-        from .sources.maintenance import scan_table
         from .sources.zonemap import filters_to_column
 
-        try:
-            return scan_table(self.spark, self.path.table_uri, filters, columns)
-        except ValueError:
-            df = self.table()
-            if filters:
-                df = df.filter(filters_to_column(filters))
-            return df.select(*columns) if columns else df
+        df, _ = self._pruned_read(filters, filters_to_column(filters) if filters else None)
+        return df.select(*columns) if columns else df
 
     def optimize(
         self,

@@ -70,8 +70,13 @@ def build_file_blooms(
     cols: list[str],
     m_bits: int = DEFAULT_M_BITS,
     k: int = DEFAULT_K,
+    schema=None,
 ) -> dict[str, dict]:
     """Bloom bitsets for ``cols`` of the files in ``paths`` (rel → abs).
+
+    ``schema`` is the written files' schema when the caller has it (the
+    writer's ``df.schema``): the read then skips parquet schema inference,
+    a Spark job over the footers of the files just written.
 
     One distributed job: every row emits its k positions per column
     (md5 split into k 32-bit lanes — a JVM Column expression, no Python in
@@ -82,7 +87,8 @@ def build_file_blooms(
     if not cols or not paths:
         return {}
     by_abs = {v: k_ for k_, v in paths.items()}
-    src = spark.read.parquet(*paths.values())
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    src = reader.parquet(*paths.values())
     # only types with a canonical string form shared by the Spark build and
     # the Python probe (_canon) participate: a bloom built on a double
     # column could never be probed (str(float) != CAST AS STRING), so it

@@ -25,6 +25,8 @@ from __future__ import annotations
 
 import math
 import os
+import string
+import unicodedata
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -60,6 +62,44 @@ def _read(spark: SparkSession, root: str, store: LocalFsStore, files: list[str])
     return reader.parquet(*[os.path.join(root, f) for f in files])
 
 
+#: ASCII characters java.net.URI leaves unquoted in a path component
+_URI_PATH_CHARS = frozenset(string.ascii_letters + string.digits + "-_.!~*'()" + ":@&=+$,;/")
+
+
+def file_path_uri(path: str) -> str:
+    """Spark's ``_metadata.file_path`` for the local file ``path``: Hadoop's
+    ``file:`` URI, quoted as ``java.net.URI`` quotes a path. ASCII outside
+    the legal path characters is percent-encoded (``%`` itself too); other
+    characters stay raw unless they are spaces or controls. So ``/a b/ü``
+    is ``file:/a%20b/ü``, unlike ``inputFiles()``'s ``file:///`` form."""
+    out = []
+    for ch in os.path.abspath(path):
+        if ch in _URI_PATH_CHARS or (
+            ord(ch) > 127 and unicodedata.category(ch) not in ("Zs", "Zl", "Zp", "Cc")
+        ):
+            out.append(ch)
+        else:
+            out.append("".join(f"%{b:02X}" for b in ch.encode("utf-8")))
+    return "file:" + "".join(out)
+
+
+def select_files(relation: DataFrame, root: str, files: list[str], live: list[str]) -> DataFrame:
+    """``relation``, a read of the snapshot ``files`` under ``root``,
+    restricted to the rows of its ``live`` subset.
+
+    Spark prunes a scan's file list on a ``_metadata.file_path``
+    predicate, so one relation per snapshot serves every pruned read: the
+    scan lists only the ``live`` files and no new file index is built (on
+    a local filesystem without native Hadoop, building one forks ``ls``
+    for every file's permissions). No survivor reads nothing."""
+    if len(live) == len(files):
+        return relation
+    if not live:
+        return relation.limit(0)
+    uris = [file_path_uri(os.path.join(root, f)) for f in live]
+    return relation.filter(F.col("_metadata.file_path").isin(uris))
+
+
 def _write_rewrite(
     df: DataFrame, root: str, bloom_cols: list[str] | None = None
 ) -> tuple[list[str], dict]:
@@ -76,7 +116,7 @@ def _write_rewrite(
         from .bloom import build_file_blooms
 
         blooms = build_file_blooms(
-            df.sparkSession, {r: os.path.join(root, r) for r in rel}, bloom_cols
+            df.sparkSession, {r: os.path.join(root, r) for r in rel}, bloom_cols, schema=df.schema
         )
         for r, recb in blooms.items():
             stats[r]["bloom"] = recb
@@ -108,10 +148,12 @@ def scan_table(
     if not files:
         raise ValueError(f"{table_uri!r} has no committed snapshot to scan")
     live = prune_files(files, stats, filters)
-    if not live:
-        base = _read(spark, root, store, files).limit(0)
-    else:
+    if live:
         base = _read(spark, root, store, live)
+    elif (schema := snapshot_schema(store)) is not None:
+        base = spark.createDataFrame([], schema)
+    else:  # a manifest from before schemas were recorded
+        base = _read(spark, root, store, files[:1]).limit(0)
     if filters:
         base = base.filter(filters_to_column(filters))
     if columns:

@@ -78,9 +78,9 @@ def ingest_dir(
     )
     # binaryFile produces no splits for zero-byte files and silently drops
     # them; the reference ingests them as ordinary rows. Union them back in
-    # from a Hadoop-FS listing (driver-side, same cost class as Spark's own
-    # file-index planning; works for file:/ and s3a:/ alike).
-    empties = _list_empty_files(spark, root)
+    # from the relation's own listing, which applies the same glob and
+    # hidden-path rules.
+    empties = _empty_files(spark, raw)
     if empties is not None:
         raw = raw.unionByName(empties)
     # never ingest our own table directory (local table_uri nests under the
@@ -117,32 +117,29 @@ def ingest_dir(
     return _chunk(base, max_chunk_size)
 
 
-def _list_empty_files(spark: SparkSession, root: str):
-    """Zero-byte files under ``root`` in the binaryFile output shape
-    (path/modificationTime/length/content), or None if there are none."""
+def _empty_files(spark: SparkSession, raw: DataFrame):
+    """The zero-byte files of the ``binaryFile`` relation ``raw`` in its
+    output shape (path/modificationTime/length/content), or None if there
+    are none. ``inputFiles()`` is the relation's file index, already
+    listed under Spark's filter rules (``pathGlobFilter``, ``.``/``_``
+    names, hidden directories); unlike the relation's splits it keeps
+    zero-byte files. ``os.stat`` sizes and stamps each file, where a
+    Hadoop ``FileStatus`` would fork ``ls`` for its permissions on a host
+    without native Hadoop."""
     import datetime
+    from urllib.parse import unquote, urlsplit
 
-    jvm = spark.sparkContext._jvm
-    jsc = spark.sparkContext._jsc
-    hpath = jvm.org.apache.hadoop.fs.Path(root)
-    fs = hpath.getFileSystem(jsc.hadoopConfiguration())
-    if not fs.exists(hpath):
-        return None
-    it = fs.listFiles(hpath, True)
     rows = []
-    while it.hasNext():
-        st = it.next()
-        if st.getLen() == 0:
-            rows.append(
-                (
-                    st.getPath().toString(),
-                    datetime.datetime.fromtimestamp(
-                        st.getModificationTime() / 1000.0, tz=datetime.timezone.utc
-                    ),
-                    0,
-                    bytearray(b""),
-                )
+    for uri in raw.inputFiles():
+        path = unquote(urlsplit(uri).path)
+        st = os.stat(path)
+        if st.st_size == 0:
+            # binaryFile's path column is the raw ``file:/…`` path, and its
+            # modificationTime Hadoop's millisecond mtime
+            mtime = datetime.datetime.fromtimestamp(
+                st.st_mtime_ns // 1_000_000 / 1000.0, tz=datetime.timezone.utc
             )
+            rows.append((f"file:{path}", mtime, 0, bytearray(b"")))
     if not rows:
         return None
     # schema matches the binaryFile source exactly (modificationTime is a
@@ -356,7 +353,7 @@ def write_table(
         from .bloom import build_file_blooms
 
         blooms = build_file_blooms(
-            df.sparkSession, {f: os.path.join(root, f) for f in new_files}, bloom_cols
+            df.sparkSession, {f: os.path.join(root, f) for f in new_files}, bloom_cols, schema=df.schema
         )
         for f, rec in blooms.items():
             stats[f]["bloom"] = rec

@@ -30,3 +30,30 @@ def duck():
     from tools.oracle_check import duck_connection
 
     return duck_connection(SF_SMOKE)
+
+
+@pytest.fixture(scope="session")
+def spark_jobs(spark):
+    """``spark_jobs(fn)`` runs ``fn()`` under a fresh Spark job group and
+    returns ``(result, jobs, stages)``: the jobs the call started and the
+    stages of those jobs that ran at least one task (skipped stages do not
+    count), read from the status tracker."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"spark-jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            result = fn()
+        finally:
+            sc._jsc.clearJobGroup()
+        sc._jsc.sc().listenerBus().waitUntilEmpty(30000)
+        tracker = sc.statusTracker()
+        jobs = tracker.getJobIdsForGroup(group)
+        stage_ids = {s for j in jobs for s in tracker.getJobInfo(j).stageIds}
+        stages = [tracker.getStageInfo(s) for s in stage_ids]
+        return result, len(jobs), sum(1 for s in stages if s is not None and s.numCompletedTasks > 0)
+
+    return run

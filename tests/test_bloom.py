@@ -187,3 +187,18 @@ def test_bloom_build_skips_float_columns(spark, tmp_path):
     with pytest.warns(UserWarning, match="non-probeable"):
         out = build_file_blooms(spark, {"rel.parquet": part}, ["id", "d"])
     assert set(out["rel.parquet"]) == {"id"}
+
+
+def test_bloom_build_with_the_written_schema_skips_inference(spark, spark_jobs, tmp_path):
+    """Given the writer's schema, the build reads its files without the
+    schema-inference job a schemaless parquet read runs first."""
+    from connected_data_lake_spark.sources.bloom import build_file_blooms
+
+    out_dir = str(tmp_path / "w.parquet")
+    df = spark.createDataFrame([(i, f"k{i}") for i in range(50)], "id bigint, k string")
+    df.repartition(3).write.parquet(out_dir)
+    paths = {f: os.path.join(out_dir, f) for f in os.listdir(out_dir) if f.endswith(".parquet")}
+    inferred, jobs_inferred, _ = spark_jobs(lambda: build_file_blooms(spark, paths, ["k"]))
+    given, jobs_given, _ = spark_jobs(lambda: build_file_blooms(spark, paths, ["k"], schema=df.schema))
+    assert given == inferred and len(given) == 3
+    assert jobs_given == jobs_inferred - 1

@@ -553,3 +553,24 @@ def test_temporal_zone_maps_prune_with_datetime_triples(spark, tmp_path):
     # string literal on the temporal column: kind mismatch, never skipped
     live_str, _ = M.pruned_file_list(uri, [("mtime", "=", "2024-03-10 12:00:00")])
     assert len(live_str) == 3
+
+
+def test_file_path_uri_quotes_like_hadoop(spark):
+    """``file_path_uri`` is the ``file:`` URI Hadoop builds for a local
+    path (the form of Spark's ``_metadata.file_path``), for ASCII
+    punctuation, spaces, percent signs and non-ASCII text alike."""
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
+
+    from connected_data_lake_spark.sources.maintenance import file_path_uri
+
+    jvm = spark.sparkContext._jvm
+    alphabet = st.sampled_from(list("aZ09-_.!~*'()@&=+$,; %#?[]{}^`|\"<>\\") + ["ü", "€", "😀", "\u00a0", "\u3000", "é"])
+
+    @settings(max_examples=200, deadline=None)
+    @given(st.lists(st.text(alphabet, min_size=1, max_size=6), min_size=1, max_size=3))
+    def check(parts):
+        path = "/tmp/" + "/".join(p for p in parts if p not in (".", ".."))
+        assert file_path_uri(path) == jvm.org.apache.hadoop.fs.Path("file:" + path).toUri().toString()
+
+    check()

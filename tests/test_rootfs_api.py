@@ -325,3 +325,178 @@ def test_property_every_surface_binds_per_instance(spark, tmp_path):
             F.lit(b"x" * (j + 1)).alias("data"),
         )
         handles[j].upsert(restore, ["name"])
+
+
+# ---------------------------------------------------------------------------
+# the read path's structure: one relation per snapshot version, pruned by
+# `_metadata.file_path`, and single-job listings within the one-split budget
+# ---------------------------------------------------------------------------
+
+
+def _plan_nodes(df):
+    """Every node of ``df``'s executed plan, descending into adaptive
+    plans and their query stages."""
+    out, stack = [], [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        out.append(node)
+        kind = node.getClass().getSimpleName()
+        if kind == "AdaptiveSparkPlanExec":
+            stack.append(node.executedPlan())
+        elif kind.endswith("QueryStageExec"):
+            stack.append(node.plan())
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return out
+
+
+def _scanned_files(df) -> int:
+    """``numFiles`` of the (single) parquet scan in ``df``'s executed plan;
+    call after ``df`` ran."""
+    scans = [n for n in _plan_nodes(df) if n.getClass().getSimpleName() == "FileSourceScanExec"]
+    assert len(scans) == 1
+    return int(scans[0].metrics().apply("numFiles").value())
+
+
+@pytest.fixture()
+def many_files(spark, tmp_path):
+    """A dataset whose table holds one file per directory: every listing
+    and scan has files to prune."""
+    src = tmp_path / "src"
+    for d in range(4):
+        for i in range(3):
+            pathlib.Path(src, f"d{d}").mkdir(parents=True, exist_ok=True)
+            pathlib.Path(src, f"d{d}", f"f{d}{i}.bin").write_bytes(bytes([d]) * (100 * d + i + 1))
+    fs = Cdl(spark=spark).open(f"local://{src}")
+    fs.load()
+    # repartition by directory: one data file per directory
+    fs.optimize(zorder_by=["parent"], target_bytes=1)
+    return fs
+
+
+def test_read_dir_within_one_split_runs_one_job(spark, spark_jobs, many_files):
+    fs = many_files
+    for listing, want in ((fs.read_dir("d1"), ["f10.bin", "f11.bin", "f12.bin"]), (fs.read_dir_all(), None)):
+        rows, jobs, stages = spark_jobs(listing.collect)
+        assert (jobs, stages) == (1, 1)
+        assert not [n for n in _plan_nodes(listing) if "Exchange" in n.getClass().getSimpleName()]
+        names = [r["name"] for r in rows]
+        if want is not None:
+            assert names == want
+        else:
+            assert [(r["parent"], r["name"]) for r in rows] == sorted((r["parent"], r["name"]) for r in rows)
+            assert len(rows) == 12
+
+
+def test_read_dir_above_one_split_keeps_the_range_sort(spark, many_files):
+    fs = many_files
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "64")
+    try:
+        listing = fs.read_dir_all()
+        rows = listing.collect()
+    finally:
+        spark.conf.unset("spark.sql.files.maxPartitionBytes")
+    assert [(r["parent"], r["name"]) for r in rows] == sorted((r["parent"], r["name"]) for r in rows)
+    exchanges = [n for n in _plan_nodes(listing) if "Exchange" in n.getClass().getSimpleName()]
+    assert exchanges
+    assert all(e.outputPartitioning().getClass().getSimpleName() == "RangePartitioning" for e in exchanges)
+
+
+def test_pruned_scan_reads_only_the_surviving_files(spark, many_files):
+    from connected_data_lake_spark.sources.maintenance import pruned_file_list
+
+    fs = many_files
+    filters = [("parent", ">=", "/d1"), ("parent", "<", "/d3")]
+    live, total = pruned_file_list(fs.path.table_uri, filters)
+    assert 0 < len(live) < total
+    scan = fs.scan(filters)
+    assert len(scan.collect()) == 6
+    assert _scanned_files(scan) == len(live)
+    listing = fs.read_dir("d2")
+    assert [r["name"] for r in listing.collect()] == ["f20.bin", "f21.bin", "f22.bin"]
+    assert _scanned_files(listing) == len(pruned_file_list(fs.path.table_uri, [("parent", "=", "/d2")])[0])
+    # no survivor: nothing is read
+    assert fs.scan([("parent", "=", "/nowhere")]).collect() == []
+    assert fs.read_dir("nowhere").collect() == []
+
+
+def test_pruned_reads_build_no_relation_while_the_version_holds(spark, many_files, monkeypatch):
+    from pyspark.sql.readwriter import DataFrameReader
+
+    fs = many_files
+    fs.read_dir("d0").collect()  # the snapshot's relation exists
+    built = []
+    parquet = DataFrameReader.parquet
+    monkeypatch.setattr(DataFrameReader, "parquet", lambda self, *a, **k: built.append(a) or parquet(self, *a, **k))
+    assert fs.read_dir("d1").count() == 3
+    assert fs.read_dir_all().count() == 12
+    assert fs.read_files("parent = '/d3' AND size > 300").count() == 3
+    assert fs.scan([("name", "=", "f32.bin")]).count() == 1
+    assert built == []
+    Cdl(spark=spark).open(f"local://{fs.path.uri}").delete([("parent", "=", "/d0")])
+    built.clear()
+    assert fs.read_dir("d0").count() == 0  # a new version: one new relation
+    assert fs.read_dir("d1").count() == 3
+    assert len(built) == 1
+
+
+def test_commit_through_another_instance_is_visible(spark, many_files):
+    fs = many_files
+    assert fs.read_dir("d1").count() == 3
+    assert fs.read_files("name = 'f11.bin'").count() == 1
+    assert fs.scan([("name", "=", "f11.bin")]).count() == 1
+    other = Cdl(spark=spark).open(f"local://{fs.path.uri}")
+    other.delete([("name", "=", "f11.bin")])
+    added = other.table().filter(F.col("name") == "f10.bin").withColumn("name", F.lit("new.bin"))
+    other.upsert(added, ["parent", "name", "chunk_id"])
+    assert [r["name"] for r in fs.read_dir("d1").collect()] == ["f10.bin", "f12.bin", "new.bin"]
+    assert fs.read_files("name = 'f11.bin'").count() == 0
+    assert fs.read_files("name LIKE 'new%'").count() == 1
+    assert fs.scan([("name", "=", "f11.bin")]).count() == 0
+    assert fs.scan([("name", "=", "new.bin")]).count() == 1
+
+
+def test_odd_dataset_path_lists_and_prunes(spark, tmp_path):
+    from connected_data_lake_spark.sources.maintenance import file_path_uri, pruned_file_list
+
+    src = tmp_path / "data set ü%#"
+    for d in ("a b", "c"):
+        pathlib.Path(src, d).mkdir(parents=True)
+        pathlib.Path(src, d, "x y.txt").write_bytes(d.encode() * 5)
+    fs = Cdl(spark=spark).open(f"local://{src}")
+    fs.load(bloom_cols=["name"])
+    fs.optimize(zorder_by=["parent"], target_bytes=1)
+    snap = fs._snapshot()
+    got = {r[0] for r in snap.relation.select("_metadata.file_path").distinct().collect()}
+    assert got == {file_path_uri(os.path.join(snap.root, f)) for f in snap.files}
+    assert [r["name"] for r in fs.read_dir("a b").collect()] == ["x y.txt"]
+    scan = fs.scan([("parent", "=", "/c")])
+    assert [r["parent"] for r in scan.collect()] == ["/c"]
+    assert _scanned_files(scan) == len(pruned_file_list(fs.path.table_uri, [("parent", "=", "/c")])[0]) == 1
+
+
+def test_ingest_follows_spark_glob_and_hidden_rules(spark, tmp_path):
+    """Empty files join the ingest under the same rules as non-empty ones:
+    the glob applies, and `.`/`_` names and hidden directories are left
+    out."""
+    from connected_data_lake_spark.sources.rootfs import ingest_dir
+
+    src = tmp_path / "src"
+    (src / "sub").mkdir(parents=True)
+    (src / ".hid").mkdir()
+    for name, data in {
+        "a.txt": b"a",
+        "e.txt": b"",
+        "empty.bin": b"",
+        ".hidden": b"h",
+        ".hidden_empty": b"",
+        "_under_empty": b"",
+        "sub/s.txt": b"s",
+        "sub/se.txt": b"",
+        ".hid/z.txt": b"",
+    }.items():
+        pathlib.Path(src, name).write_bytes(data)
+    got = {(r["parent"], r["name"], r["size"]) for r in ingest_dir(spark, str(src), glob="*.txt").collect()}
+    assert got == {("/", "a.txt", 1), ("/", "e.txt", 0), ("/sub", "s.txt", 1), ("/sub", "se.txt", 0)}
+    every = {r["name"] for r in ingest_dir(spark, str(src)).collect()}
+    assert every == {"a.txt", "e.txt", "empty.bin", "s.txt", "se.txt"}
